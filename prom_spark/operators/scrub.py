@@ -209,7 +209,9 @@ def strip_boilerplate(
     line order. The detected set is broadcast (it is small by
     construction — see ``boilerplate_lines``); the re-assembly groups
     by the document id, the same key as any downstream per-document
-    stage."""
+    stage. Boilerplate lines are marked by a left join rather than
+    dropped before the grouping, so a document made only of boilerplate
+    still comes out, as ''."""
     bp = boilerplate_lines(
         df, group_col, id_col, text_col,
         min_doc_frac=min_doc_frac, min_docs=min_docs,
@@ -219,19 +221,21 @@ def strip_boilerplate(
         F.col(id_col).alias("_id"),
         F.posexplode(F.split(F.col(text_col), r"\n")).alias("_pos", "_line"),
     )
-    kept = lines.join(
+    marked = lines.join(
         F.broadcast(bp),
         on=(lines["_g"] == bp["_g"]) & (F.trim(lines["_line"]) == bp["_bp_line"]),
-        how="left_anti",
+        how="left",
+    )
+    # collect_list skips the NULLs the boilerplate lines map to
+    kept_line = F.when(
+        F.col("_bp_line").isNull(), F.struct(F.col("_pos"), F.col("_line"))
     )
     return (
-        kept.groupBy("_id")
+        marked.groupBy("_id")
         .agg(
             F.array_join(
                 F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("_pos"), F.col("_line")))
-                    ),
+                    F.array_sort(F.collect_list(kept_line)),
                     lambda s: s["_line"],
                 ),
                 "\n",

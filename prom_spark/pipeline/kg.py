@@ -3,18 +3,27 @@
 Stages (each a checkpointed table via sinks.StageStore; resumable):
 
   ingest        transcripts, bucketed by hash(conv_id)
-  mentions      candidate grams (Arrow-batched UDF, pipeline.mentions)
-  linked        entity-link scoring: exact + fuzzy candidates against the
-                alias dictionary (broadcast or salted join), ensemble
-                rating = w_s * levenshtein + w_e * embedding-cosine,
-                best-per-mention selection
-  triples_raw   predicate extraction per turn (pattern join over token
-                positions) + cross-turn `follows` via turn-ordered window
+  grams         distinct candidate grams (unigrams + first-token-blocked
+                bigrams) from the JVM-native detector, pipeline.mentions
+  fuzzy_scores  per distinct gram: ensemble rating = w_s * levenshtein +
+                w_e * embedding-cosine against the alias dictionary,
+                blocked on (first char, word count)
+  candidates    ``candidate_plan``: occurrences whose gram matches an
+                alias or a fuzzy score (inline keyset, broadcast or
+                salted semi-join), plus predicate-token occurrences
   entity_map    canonicalization: alias-overlap edges -> connected
                 components -> entity_id -> canonical_id
+  triples_raw   ``triples_plan``: exact + fuzzy scoring joins, per-turn
+                best-per-span selection, pattern extraction over token
+                positions and cross-turn `follows`, in one exchange that
+                is also the bucketed layout
   triples       canonical (subj, pred, obj, conv_id, turn_idx), bucketed
                 by hash(conv_id), sorted within partitions by
-                (conv_id, turn_idx)
+                (conv_id, turn_idx) — an alias of triples_raw
+
+``candidate_plan`` and ``triples_plan`` are the one linking plan: the
+streaming micro-batches (streaming.pipeline) run them per batch and q25
+scores the same candidates before its flat per-span selection.
 
 The reference analogue is Prom.run_all (reference src/prom.py:201-213):
 lexical/structural matching -> selection -> link ontology -> merged
@@ -36,13 +45,11 @@ from prom_spark.functions.embedding import hash_embedding
 from prom_spark.functions.similarity import cosine_sim, norm_levenshtein
 from prom_spark.operators.connected_components import connected_components
 from prom_spark.operators.salted_join import salted_join
-from prom_spark.operators.selection import best_candidate_per_left_agg
 from prom_spark.pipeline.mentions import (
     detect_matching_mentions,
     detect_mentions,
     detect_predicates,
     distinct_grams,
-    tokens,
 )
 from prom_spark.sinks import StageStore
 
@@ -114,101 +121,7 @@ def _bucket_layout(
 class KgResult:
     triples: DataFrame
     entity_canonical: DataFrame
-    linked_mentions: DataFrame
     store: StageStore
-
-
-def _link_candidates(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    use_salting: bool | None = None,
-    hot_keys=None,
-) -> DataFrame:
-    """Scored link candidates per mention occurrence (pre-selection).
-
-    Exact path: equi-join gram == alias. When the dictionary fits the
-    broadcast threshold a broadcast hash join is strictly better than
-    any salting scheme (no shuffle at all, skew irrelevant); the salted
-    shuffle join is the path for dictionaries too large to broadcast,
-    where Zipf-hot grams would otherwise pile into single reducers.
-    ``use_salting=None`` picks automatically from the dictionary size.
-
-    Fuzzy path: block on (first char, token count), score ensemble of
-    normalized Levenshtein + embedding cosine — per DISTINCT gram. The
-    bounded score table is then joined back onto occurrences: broadcast
-    when the dictionary regime broadcasts (the occurrence⋈score join on
-    raw `gram` is exactly the Zipf-skewed join salting exists for, and
-    broadcasting removes the shuffle outright), salted otherwise —
-    fuzzy_scores is dictionary-bounded (distinct grams × variants above
-    threshold), so in the beyond-broadcast dictionary regime it must be
-    presumed beyond the broadcast budget too (GBs do not broadcast), and
-    its gram key carries the same Zipf-hot skew as the exact join.
-    """
-    dict_slim = dictionary.select("alias", "entity_id", "embedding")
-    n_dict = None
-    if use_salting is None:
-        # dictionaries are entity catalogs: row count is a fine proxy
-        n_dict = dict_slim.count()
-        use_salting = n_dict > cfg.dict_broadcast_limit
-
-    if use_salting:
-        # semi-join reduction BEFORE the salted shuffle: the mention
-        # stream is mostly non-dictionary grams, and shuffling them to
-        # discover that wastes the exchange. A broadcast left_semi on
-        # just the alias STRINGS (tiny next to the full dictionary rows,
-        # whose embedding payloads are what break the broadcast budget)
-        # drops non-matches map-side, so the salted join only moves rows
-        # that will actually match. Above alias_broadcast_limit even the
-        # bare string set exceeds the broadcast budget, and the
-        # reduction itself becomes a salted shuffle semi-join (strings
-        # only — no payload ever rides this exchange).
-        if n_dict is None:
-            n_dict = dict_slim.count()
-        alias_set = dict_slim.select(F.col("alias").alias("gram")).distinct()
-        if n_dict <= cfg.alias_broadcast_limit:
-            matching = mentions.join(
-                F.broadcast(alias_set), on="gram", how="left_semi"
-            )
-        else:
-            matching = salted_join(
-                mentions, alias_set, key="gram",
-                n_salts=cfg.hot_key_salts,
-                hot_factor=cfg.hot_key_factor,
-                hot_keys=hot_keys,
-                detect_sample_fraction=cfg.hot_key_sample,
-                how="left_semi",
-            )
-        exact_raw = salted_join(
-            matching,
-            dict_slim.withColumnRenamed("alias", "gram"),
-            key="gram",
-            n_salts=cfg.hot_key_salts,
-            hot_factor=cfg.hot_key_factor,
-            hot_keys=hot_keys,
-            detect_sample_fraction=cfg.hot_key_sample,
-        )
-    else:
-        exact_raw = mentions.join(
-            F.broadcast(dict_slim.withColumnRenamed("alias", "gram")), on="gram"
-        )
-    exact = exact_raw.withColumn("rating", F.lit(1.0)).select(
-        "conv_id", "turn_idx", "gram", "start", "end", "entity_id", "rating"
-    )
-
-    # fuzzy path: score DISTINCT unmatched grams against the dictionary,
-    # broadcast the bounded score table back onto occurrences. Above the
-    # dictionary broadcast budget the scoring join itself must not
-    # broadcast the embedding payloads either (broadcast_dict=False).
-    fuzzy_scores = _fuzzy_scores(
-        mentions.select("gram").distinct(), dict_slim, cfg,
-        broadcast_dict=not use_salting,
-    )
-    fuzzy = _fuzzy_rejoin(
-        mentions, fuzzy_scores, cfg,
-        broadcast=not use_salting, hot_keys=hot_keys,
-    )
-    return exact.unionByName(fuzzy)
 
 
 def _fuzzy_rejoin(
@@ -317,15 +230,24 @@ def _score_candidates(
     hot_keys=None,
     fuzzy_rows: int | None = None,
 ) -> DataFrame:
-    """Score a PRE-FILTERED occurrence stream (every row's gram is known
-    to match the dictionary exactly or appear in ``fuzzy_scores``).
+    """Scored link candidates (conv_id, turn_idx, gram, start, end,
+    entity_id, rating) for a PRE-FILTERED occurrence stream — every
+    row's gram is known to match the dictionary exactly or appear in
+    ``fuzzy_scores`` (``candidate_plan``'s 'm' rows).
 
-    Same join design as ``_link_candidates`` minus the semi-reduction
-    (already applied upstream) and minus the distinct-gram scoring
-    (supplied precomputed — in ``build_kg`` it is its own checkpoint,
-    so ``fuzzy_rows`` comes free from the stage metrics and refines the
-    fuzzy re-join choice: even in the salted-dictionary regime a score
-    table that MEASURES under the broadcast budget broadcasts).
+    Exact path: equi-join gram == alias. When the dictionary fits the
+    broadcast budget a broadcast hash join is strictly better than any
+    salting scheme (no shuffle at all, skew irrelevant); the salted
+    shuffle join (``use_salting``) is the path for dictionaries too
+    large to broadcast, where Zipf-hot grams would otherwise pile into
+    single reducers.
+
+    Fuzzy path: the distinct-gram score table (``_fuzzy_scores``,
+    supplied precomputed) is re-joined onto the occurrences
+    (``_fuzzy_rejoin``). ``fuzzy_rows`` — free from ``build_kg``'s
+    checkpoint metrics — refines that choice: even in the
+    salted-dictionary regime a score table that MEASURES under the
+    broadcast budget broadcasts.
     """
     d = dict_slim.withColumnRenamed("alias", "gram")
     if use_salting:
@@ -350,77 +272,31 @@ def _score_candidates(
     return exact.unionByName(fuzzy)
 
 
-def link_mentions(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    use_salting: bool | None = None,
-    hot_keys=None,
-) -> DataFrame:
-    """Entity-link scoring + per-span selection, flat output
-    (north_star stage 3; see ``_link_candidates`` for the join design).
-
-    Selection: best candidate per mention span via single-shuffle
-    aggregation (map-side combine collapses hot spans pre-exchange).
-    Within a span key the gram is fixed, so selection = max rating,
-    ties to the smallest entity_id.
-    """
-    candidates = _link_candidates(mentions, dictionary, cfg, use_salting, hot_keys)
-    return best_candidate_per_left_agg(
-        candidates,
-        key_cols=["conv_id", "turn_idx", "start", "end"],
-        payload_cols=["entity_id", "gram"],
-        threshold=cfg.link_threshold,
-    ).select("conv_id", "turn_idx", "gram", "start", "end", "entity_id", "rating")
-
-
 # per-turn entity struct carried into predicate extraction; field names
 # (ts, te) avoid the ANSI-reserved `end`
 _ENT_STRUCT = "struct<ts:int,te:int,entity_id:string>"
-
-
-def link_mentions_per_turn(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    use_salting: bool | None = None,
-    entity_map: DataFrame | None = None,
-    hot_keys=None,
-) -> DataFrame:
-    """Entity linking straight to per-turn entity arrays — the fused
-    form ``build_kg`` uses.
-
-    One shuffle takes the scored candidate stream directly to
-    ``(conv_id, turn_idx, ents)``; per-span selection happens INSIDE the
-    per-turn array (keep-first over the span-sorted candidates, which
-    under the sort key (ts, te, -rating, entity_id) is exactly the flat
-    path's max-rating / min-entity choice — equivalence is tested).
-    Canonical ids are applied on the candidate stream (broadcast join),
-    so downstream needs no further mapping and no global dedup.
-
-    Versus the flat formulation this removes an entire checkpoint
-    round-trip and re-shuffle of the per-mention link table — on a
-    single box that table's movement is pure memory-bandwidth cost, and
-    on a cluster it is a full extra exchange of the largest intermediate.
-    """
-    cand = _link_candidates(mentions, dictionary, cfg, use_salting, hot_keys)
-    return _per_turn_select(cand, cfg, entity_map)
-
-
 _CAND_STRUCT = "struct<ts:int,te:int,nr:double,entity_id:string>"
 _PRED_STRUCT = "struct<p:int,tok:string>"
 
 
 def _per_turn_select(
     cand: DataFrame,
+    preds: DataFrame,
+    entity_map: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    entity_map: DataFrame | None = None,
-    preds: DataFrame | None = None,
     layout: dict | None = None,
 ) -> DataFrame:
-    """Scored candidate stream -> (conv_id, turn_idx, ents) in one
-    shuffle, canonical ids applied pre-grouping, per-span selection
-    inside the sorted array (see ``link_mentions_per_turn``).
+    """Scored candidate stream -> (conv_id, turn_idx, ents, preds) in
+    one shuffle.
+
+    Canonical ids are applied on the candidate stream (broadcast join
+    of ``entity_map``), so downstream needs no further mapping and no
+    global dedup. Per-span selection happens INSIDE the per-turn array:
+    keep-first over the span-sorted candidates, which under the sort key
+    (ts, te, -rating, entity_id) is the max-rating / min-entity choice
+    ``best_candidate_per_left_agg`` makes per span (equivalence is
+    tested). Against a flat per-mention link table this removes a
+    materialization and a re-shuffle of the largest intermediate.
 
     ``layout``: optional ``_bucket_layout`` kwargs
     (``n_buckets``/``n_rows``/``min_bucket_rows``). When given, the
@@ -434,22 +310,19 @@ def _per_turn_select(
     keys the same way — one exchange serves the grouping, the window,
     and the final bucketed write.
 
-    ``preds``: optional predicate-occurrence stream (conv_id, turn_idx,
-    gram, start — from ``detect_predicates`` / the fused candidate
-    scan). When given, predicate positions ride the SAME grouping
-    shuffle as extra null-padded rows and the output gains a ``preds``
-    array column — so triple extraction downstream needs no join back to
+    ``preds``: the predicate-occurrence stream (conv_id, turn_idx, gram,
+    start — ``candidate_plan``'s 'p' rows). Predicate positions ride the
+    SAME grouping shuffle as extra null-padded rows and come out as the
+    ``preds`` array column, so triple extraction needs no join back to
     the transcript text at all. Turns whose candidates all fall below
     the rating threshold are dropped even when they carry predicates
-    (identical row set to the preds-less form — nothing to extract from
-    a turn with no linked entities)."""
-    cand = cand.filter(F.col("rating") > cfg.link_threshold)
-    if entity_map is not None:
-        cand = (
-            cand.join(F.broadcast(entity_map), on="entity_id", how="left")
-            .withColumn("entity_id", F.coalesce("canonical_id", "entity_id"))
-            .drop("canonical_id")
-        )
+    (nothing to extract from a turn with no linked entities)."""
+    cand = (
+        cand.filter(F.col("rating") > cfg.link_threshold)
+        .join(F.broadcast(entity_map), on="entity_id", how="left")
+        .withColumn("entity_id", F.coalesce("canonical_id", "entity_id"))
+        .drop("canonical_id")
+    )
     cand_struct = F.struct(
         F.col("start").alias("ts"),
         F.col("end").alias("te"),
@@ -468,14 +341,6 @@ def _per_turn_select(
                     AS {_ENT_STRUCT}))
         """
     ).alias("ents")
-    if preds is None:
-        if layout is not None:
-            cand = _bucket_layout(cand, keep_sub=True, **layout)
-        keys = [c for c in ("bucket", "_sub") if c in cand.columns]
-        per_turn = cand.groupBy(*keys, "conv_id", "turn_idx").agg(
-            F.array_sort(F.collect_list(cand_struct)).alias("_cands")
-        )
-        return per_turn.select(*keys, "conv_id", "turn_idx", ents_expr)
     rows = cand.select(
         "conv_id",
         "turn_idx",
@@ -505,114 +370,32 @@ def _per_turn_select(
     return per_turn.select(*keys, "conv_id", "turn_idx", ents_expr, "preds")
 
 
-def extract_triples(
-    transcripts: DataFrame | None,
-    linked: DataFrame,
-    entity_map: DataFrame | None = None,
-) -> DataFrame:
-    """Predicate extraction (north_star stage 4).
+def extract_triples(linked: DataFrame) -> DataFrame:
+    """Predicate extraction (north_star stage 4) over the per-turn
+    ``(conv_id, turn_idx, ents, preds)`` frame of ``_per_turn_select``.
 
-    Fast path: a ``linked`` frame that already carries BOTH ``ents`` and
-    ``preds`` per-turn arrays (``_per_turn_select(preds=...)`` — the
-    ``build_kg`` shape) needs NO transcript re-scan and NO join at all:
-    predicate positions were detected in the same pass as the mentions
-    and grouped in the same shuffle. ``transcripts`` may be None. If the
-    frame also carries ``bucket``/``_sub`` layout columns (from
-    ``_bucket_layout(keep_sub=True)``), the cross-turn ``follows``
-    window partitions on them too, so the layout exchange upstream
-    satisfies the window's distribution and this whole stage plans as a
-    single exchange: repartition -> sort -> array ops -> explode ->
-    write. The slow path below (flat linked + transcripts) remains for
-    streaming micro-batches and the q25 oracle chain.
-
-    Plan shape: ONE shuffle groups linked mentions into a per-turn entity
-    array; predicate token positions come straight from the turn text
-    (narrow scan — the tokenizer is shared with mention detection, so
-    positions line up by construction). Everything per-turn — the
+    Entities are already canonical and span-selected, and predicate
+    positions were detected in the same scan as the mentions and
+    grouped in the same shuffle, so this stage needs NO transcript
+    re-scan and NO join. Everything per-turn — the
     `<subj> <pred> [the] <obj>` adjacency pattern, co-occurrence pairs,
-    the turn-subject pick — is then higher-order array expressions inside
-    codegen; turn arrays are bounded by turn length, so per-group work is
-    O(turn tokens), never O(corpus).
-
-    The previous formulation (three position-equi-joins + two windows +
-    two global distincts over the full mention table) spent ~6 shuffles
-    on what one groupBy expresses; at 10^12 turns those exchanges are the
-    whole cost.
+    the turn-subject pick — is higher-order array expressions inside
+    codegen; turn arrays are bounded by turn length, so per-group work
+    is O(turn tokens), never O(corpus). Because every emitted triple
+    carries (conv_id, turn_idx), duplicates can only arise within one
+    turn, so the per-turn ``array_distinct`` is a complete dedup and no
+    global ``distinct`` (a corpus-wide exchange) is needed.
 
     Cross-turn `follows` edges use a (conv_id)-partitioned window over
     the per-turn rows, ordered by turn_idx — the stable-ordering
-    invariant O4, at one row per turn instead of one per mention.
-
-    When ``entity_map`` is given, entity ids are canonicalized BEFORE the
-    per-turn grouping (one broadcast join on the mention stream). Because
-    every emitted triple carries (conv_id, turn_idx), duplicates can only
-    arise within a single turn — so the per-turn ``array_distinct`` after
-    canonical mapping is a complete dedup, and the final stage needs no
-    global ``distinct`` (a full corpus-wide exchange at 10^12 scale).
+    invariant O4, at one row per turn instead of one per mention. If
+    the frame carries ``bucket``/``_sub`` layout columns (from
+    ``_bucket_layout(keep_sub=True)``), the window partitions on them
+    too, so the layout exchange upstream satisfies the window's
+    distribution and the whole stage plans as a single exchange:
+    repartition -> sort -> array ops -> explode -> write.
     """
-    if transcripts is None and "preds" not in linked.columns:
-        raise ValueError(
-            "extract_triples: `linked` carries no per-turn `preds` column "
-            "and no transcripts frame was given — predicate positions "
-            "must come from one of them. A `linked` frame from before the "
-            "fused-preds format (e.g. an old checkpoint) needs "
-            "transcripts=..., or recompute the stage with resume=False."
-        )
-    carry = []
-    if "ents" in linked.columns and "preds" in linked.columns:
-        # fully fused input from _per_turn_select(preds=...): per-turn
-        # entity AND predicate arrays, canonical, span-selected — no
-        # transcript scan, no join
-        carry = [c for c in ("bucket", "_sub") if c in linked.columns]
-        per_turn = linked.select("conv_id", "turn_idx", *carry, "ents", "preds")
-    elif "ents" in linked.columns:
-        # per-turn input from link_mentions_per_turn: already canonical,
-        # already span-selected — no grouping shuffle needed here
-        ents = linked.select("conv_id", "turn_idx", "ents")
-        per_turn = None
-    else:
-        if entity_map is not None:
-            linked = (
-                linked.join(
-                    F.broadcast(entity_map), on="entity_id", how="left"
-                )
-                .withColumn(
-                    "entity_id", F.coalesce("canonical_id", "entity_id")
-                )
-                .drop("canonical_id")
-            )
-        # struct fields renamed (ts, te): `end` is reserved under the ANSI
-        # parser and would break the lambda field accesses below
-        ents = linked.groupBy("conv_id", "turn_idx").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("start").alias("ts"),
-                        F.col("end").alias("te"),
-                        "entity_id",
-                    )
-                )
-            ).alias("ents")
-        )
-        per_turn = None
-    if per_turn is None:
-        if "_toks" not in transcripts.columns:
-            transcripts = transcripts.withColumn("_toks", tokens(F.col("text")))
-        preds = (
-            transcripts
-            .select(
-                "conv_id",
-                "turn_idx",
-                F.filter(
-                    F.transform(
-                        "_toks",
-                        lambda x, i: F.struct(x.alias("tok"), i.cast("int").alias("p")),
-                    ),
-                    lambda s: s["tok"].isin(*PREDICATES),
-                ).alias("preds"),
-            )
-        )
-        per_turn = ents.join(preds, on=["conv_id", "turn_idx"], how="left")
+    carry = [c for c in ("bucket", "_sub") if c in linked.columns]
 
     # within-turn: subj ends at p-1, obj starts at p+1 (or p+2 skipping a
     # determiner). array_distinct replaces the old global distinct — the
@@ -638,11 +421,11 @@ def extract_triples(
     # conv_id appends at most one extra triple to each turn's array, and a
     # single explode emits everything. One plan, no union, no recomputed
     # subtree — a union of separately-derived branches would execute the
-    # groupBy+join twice.
+    # grouping twice.
     w_conv = Window.partitionBy(*carry, "conv_id").orderBy("turn_idx")
     _EMPTY = "array<struct<subj:string,pred:string,obj:string>>"
     per_turn = (
-        per_turn.withColumn(
+        linked.withColumn(
             "ids",
             F.array_sort(F.array_distinct(F.expr("transform(ents, e -> e.entity_id)"))),
         )
@@ -651,7 +434,7 @@ def extract_triples(
         .withColumn(
             "turn_triples",
             F.concat(
-                F.coalesce(within_arr, F.array().cast(_EMPTY)),
+                within_arr,
                 cooc_arr,
                 F.when(
                     F.col("_prev").isNotNull(),
@@ -672,6 +455,123 @@ def extract_triples(
         *carry,
         F.explode("turn_triples").alias("t"),
     ).select("conv_id", "turn_idx", *carry, "t.subj", "t.pred", "t.obj")
+
+
+def dictionary_regime(
+    dict_slim: DataFrame,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    use_salting: bool | None = None,
+) -> tuple[bool, int]:
+    """(use_salting, n_dict): the join regime of the linking plan.
+
+    ``use_salting=None`` picks from the dictionary size — a dictionary
+    under ``cfg.dict_broadcast_limit`` broadcasts (no shuffle, skew
+    irrelevant), a larger one takes the salted shuffle path. A forced
+    ``True`` still counts the dictionary, since ``candidate_plan`` gates
+    its semi-join on the size; a forced ``False`` skips the count job
+    (``n_dict=0``). Dictionaries are entity catalogs: the row count is a
+    fine proxy for the broadcast size.
+    """
+    if use_salting is None:
+        n_dict = dict_slim.count()
+        return n_dict > cfg.dict_broadcast_limit, n_dict
+    return use_salting, dict_slim.count() if use_salting else 0
+
+
+def candidate_plan(
+    transcripts: DataFrame,
+    dict_slim: DataFrame,
+    fuzzy_scores: DataFrame,
+    n_dict: int,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    bigram_first_tokens: list[str] | None = None,
+    hot_keys=None,
+) -> DataFrame:
+    """Mention occurrences that can link, plus predicate occurrences:
+    (conv_id, turn_idx, gram, start, end, kind) with kind 'm' for grams
+    that match an alias exactly or appear in ``fuzzy_scores``, and 'p'
+    for predicate tokens — so the triple stage needs no second pass over
+    the text. The one candidate plan of ``build_kg``, the streaming
+    micro-batches and q25.
+
+    Three escalating plans, all emitting the identical relation:
+
+      match keys <= cfg.inline_keyset_limit   membership probed INSIDE
+          the token arrays before any explode (detect_matching_mentions,
+          predicates fused into the same scan) — only true mentions ever
+          become rows; measured 2.5x faster than exploding the full
+          stream into a semi-join
+      n_dict <= cfg.alias_broadcast_limit     explode + broadcast
+          semi-join on the key strings
+      above                                   the alias string set
+          itself exceeds the broadcast budget: salted shuffle semi-join
+          (strings only — no payload rides this exchange)
+
+    The inline gate collects up to ``inline_keyset_limit + 1`` match
+    keys to the driver, which is why ``build_kg`` runs this inside its
+    ``candidates`` stage thunk (a resume that reuses the checkpoint
+    never pays it). ``bigram_first_tokens`` prunes the exploded stream's
+    bigrams exactly as it pruned the ``distinct_grams`` that fed
+    ``fuzzy_scores``.
+    """
+    match_keys = (
+        dict_slim.select(F.col("alias").alias("gram"))
+        .unionByName(fuzzy_scores.select("gram"))
+        .distinct()
+    )
+    salted = n_dict > cfg.alias_broadcast_limit
+    if not salted:
+        inline_keys = [
+            r.gram
+            for r in match_keys.limit(cfg.inline_keyset_limit + 1).collect()
+        ]
+        if len(inline_keys) <= cfg.inline_keyset_limit:
+            return detect_matching_mentions(
+                transcripts, inline_keys, predicates=PREDICATES
+            )
+    mentions = detect_mentions(transcripts, bigram_first_tokens=bigram_first_tokens)
+    if not salted:
+        matching = mentions.join(F.broadcast(match_keys), on="gram", how="left_semi")
+    else:
+        matching = salted_join(
+            mentions, match_keys, key="gram",
+            n_salts=cfg.hot_key_salts,
+            hot_factor=cfg.hot_key_factor,
+            hot_keys=hot_keys,
+            detect_sample_fraction=cfg.hot_key_sample,
+            how="left_semi",
+        )
+    return matching.withColumn("kind", F.lit("m")).unionByName(
+        detect_predicates(transcripts, PREDICATES)
+    )
+
+
+def triples_plan(
+    candidates: DataFrame,
+    dict_slim: DataFrame,
+    fuzzy_scores: DataFrame,
+    entity_map: DataFrame,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    use_salting: bool = False,
+    hot_keys=None,
+    fuzzy_rows: int | None = None,
+    layout: dict | None = None,
+) -> DataFrame:
+    """Canonical triples of a ``candidate_plan`` relation: scoring
+    joins -> per-turn linking -> extraction, as ONE plan over ONE
+    shuffle exchange (with ``layout``, the published bucket layout —
+    see ``_per_turn_select``). The per-turn linked table is never
+    materialized: at 10^12 turns its write + re-read + second exchange
+    would be the largest avoidable cost in the plan."""
+    scored = _score_candidates(
+        candidates.filter(F.col("kind") == "m").drop("kind"),
+        dict_slim, fuzzy_scores, cfg,
+        use_salting=use_salting, hot_keys=hot_keys, fuzzy_rows=fuzzy_rows,
+    )
+    return extract_triples(_per_turn_select(
+        scored, candidates.filter(F.col("kind") == "p"), entity_map, cfg,
+        layout=layout,
+    ))
 
 
 def canonicalize_entities(dictionary: DataFrame) -> DataFrame:
@@ -759,8 +659,8 @@ def build_kg(
     """Run (or resume) the full pipeline, checkpointing every stage.
 
     ``use_salting=None`` (the default) picks the join strategy from the
-    dictionary size, exactly like ``_link_candidates``: a dictionary
-    under ``cfg.dict_broadcast_limit`` broadcasts (no shuffle, skew
+    dictionary size (``dictionary_regime``): a dictionary under
+    ``cfg.dict_broadcast_limit`` broadcasts (no shuffle, skew
     irrelevant — strictly better than any salting scheme), a larger one
     takes the salted shuffle path. Pass True/False to force a path
     (tests; skew-path benchmarking).
@@ -789,8 +689,8 @@ def build_kg(
     # measured (1.2M turns, 4c+16c) — the +50% stage-table write cost
     # exceeds what the three downstream scans save, because their wall
     # is the struct explode + aggregation, not the tokenizer regex.
-    # detect_mentions/extract_triples still reuse a `_toks` column when
-    # a caller provides one.
+    # the mention detectors still reuse a `_toks` column when a caller
+    # provides one.
     ingest = store.get_or_compute(
         "ingest",
         # n_rows gates the write-balancing sub-split on data size: the
@@ -835,95 +735,46 @@ def build_kg(
     #               exactly or fuzzily (bounded by true mention volume)
     # at the price of one extra tokenize pass over the turn text (cheap,
     # codegen) instead of a full write+read of the mention stream.
-    mentions_full = detect_mentions(ingest, bigram_first_tokens=first_tokens)
     dict_slim = dictionary.select("alias", "entity_id", "embedding")
 
     grams = store.get_or_compute(
         "grams",
         # strings-only distinct with per-turn array_distinct pre-dedup —
-        # equivalence-tested against mentions_full.select("gram").distinct()
+        # equivalence-tested against the mention stream's distinct grams
         lambda: distinct_grams(ingest, bigram_first_tokens=first_tokens),
         resume=resume,
         inputs=["ingest"],
     )
     # one count job over the dictionary (an entity catalog, cheap next to
     # any corpus pass) gates every broadcast below
-    if use_salting is None:
-        n_dict = dict_slim.count()
-        use_salting = n_dict > cfg.dict_broadcast_limit
-    else:
-        n_dict = dict_slim.count() if use_salting else 0
+    use_salting, n_dict = dictionary_regime(dict_slim, cfg, use_salting)
     fuzzy_scores = store.get_or_compute(
         "fuzzy_scores",
         lambda: _fuzzy_scores(
             grams, dict_slim, cfg,
-            broadcast_dict=not (use_salting and n_dict > cfg.dict_broadcast_limit),
+            broadcast_dict=n_dict <= cfg.dict_broadcast_limit,
         ),
         resume=resume,
         inputs=["grams", "<dictionary>"],
     )
-    match_keys = (
-        dict_slim.select(F.col("alias").alias("gram"))
-        .unionByName(fuzzy_scores.select("gram"))
-        .distinct()
-    )
-    # predicate occurrences ride the candidate stage (kind='p') so the
-    # triple-extraction stage needs no second pass over the corpus text;
-    # the inline plan detects them in the SAME scan, the explode plans
-    # union a dedicated narrow scan.
-    #
     # The plan choice (inline keyset vs broadcast vs salted semi-join)
-    # is deferred INTO the thunk: it needs a driver collect over
-    # match_keys, which a resume run that reuses the checkpoint must
-    # never pay. For checkpoint invalidation the inputs list carries the
-    # CONFIG knobs the choice is a pure function of (given the same
-    # upstream data, which the other inputs entries pin) — so a gate
-    # change between runs recomputes instead of silently reusing a
-    # checkpoint built under a different plan.
+    # runs INSIDE the thunk: it needs a driver collect over the match
+    # keys, which a resume run that reuses the checkpoint must never
+    # pay. For checkpoint invalidation the inputs list carries the CONFIG
+    # knobs the choice is a pure function of (given the same upstream
+    # data, which the other inputs entries pin) — so a gate change
+    # between runs recomputes instead of silently reusing a checkpoint
+    # built under a different plan.
     gate_tag = (
         f"gate:inline={cfg.inline_keyset_limit}"
         f",alias_bc={cfg.alias_broadcast_limit},salted={bool(use_salting)}"
     )
-
-    def _candidates():
-        if n_dict > cfg.alias_broadcast_limit:
-            # the alias string set itself exceeds the broadcast budget:
-            # the semi-reduction becomes a salted shuffle semi-join
-            # (strings only)
-            return salted_join(
-                mentions_full, match_keys, key="gram",
-                n_salts=cfg.hot_key_salts,
-                hot_factor=cfg.hot_key_factor,
-                hot_keys=hot_keys,
-                detect_sample_fraction=cfg.hot_key_sample,
-                how="left_semi",
-            ).withColumn("kind", F.lit("m")).unionByName(
-                detect_predicates(ingest, PREDICATES)
-            )
-        # three escalating plans, all emitting the identical relation:
-        #   keyset <= inline_keyset_limit   membership probed INSIDE the
-        #       token arrays before any explode (detect_matching_mentions
-        #       — only true mentions ever become rows; measured 2.5x
-        #       faster than exploding the full stream into a semi-join)
-        #   <= alias_broadcast_limit        explode + broadcast semi-join
-        #   above                           (handled above)
-        inline_keys = [
-            r.gram
-            for r in match_keys.limit(cfg.inline_keyset_limit + 1).collect()
-        ]
-        if len(inline_keys) <= cfg.inline_keyset_limit:
-            return detect_matching_mentions(
-                ingest, inline_keys, predicates=PREDICATES
-            )
-        return mentions_full.join(
-            F.broadcast(match_keys), on="gram", how="left_semi"
-        ).withColumn("kind", F.lit("m")).unionByName(
-            detect_predicates(ingest, PREDICATES)
-        )
-
     candidates = store.get_or_compute(
         "candidates",
-        _candidates,
+        lambda: candidate_plan(
+            ingest, dict_slim, fuzzy_scores, n_dict, cfg,
+            bigram_first_tokens=first_tokens, hot_keys=hot_keys,
+        ),
         resume=resume,
         inputs=["ingest", "fuzzy_scores", "<dictionary>", gate_tag],
         require_cols=["kind"],
@@ -942,43 +793,24 @@ def build_kg(
     # published bucket layout, and that exchange serves the per-turn
     # grouping, the cross-turn `follows` window AND the final bucketed
     # write (layout= threads bucket[,_sub] into the grouping and window
-    # keys — subset rule, see _per_turn_select). The per-turn linked
-    # table is never materialized: checkpointing it was a full
-    # corpus-sized write + re-read + second exchange purely to resume a
-    # sub-stage (scoring + grouping) that is cheap next to the candidate
-    # detection it resumes FROM — at 10^12 turns that round-trip is the
-    # largest avoidable cost left in the plan. `linked_mentions` on the
-    # result is the same sub-plan, lazily re-derived from the candidates
-    # checkpoint when a consumer actually evaluates it.
-    def _linked_plan(layout: dict | None = None) -> DataFrame:
-        return _per_turn_select(
-            _score_candidates(
-                candidates.filter(F.col("kind") == "m").drop("kind"),
-                dict_slim, fuzzy_scores, cfg,
-                use_salting=use_salting, hot_keys=hot_keys,
-                # the checkpoint row count is free and refines the fuzzy
-                # re-join: broadcast iff the score table measures under
-                # the budget, salted shuffle otherwise
-                fuzzy_rows=store.metrics("fuzzy_scores")["rows"],
-            ),
-            cfg,
-            entity_map,
-            preds=candidates.filter(F.col("kind") == "p"),
-            layout=layout,
-        )
-
+    # keys — subset rule, see _per_turn_select).
     triples_raw = store.get_or_compute(
         "triples_raw",
-        # the ingest checkpoint's recorded row count (= turns, the row
-        # grain entering the layout shuffle) gates the write-balancing
-        # sub-split for free (no count job)
-        lambda: extract_triples(
-            None,
-            _linked_plan(layout=dict(
+        lambda: triples_plan(
+            candidates, dict_slim, fuzzy_scores, entity_map, cfg,
+            use_salting=use_salting, hot_keys=hot_keys,
+            # the checkpoint row count is free and refines the fuzzy
+            # re-join: broadcast iff the score table measures under the
+            # budget, salted shuffle otherwise
+            fuzzy_rows=store.metrics("fuzzy_scores")["rows"],
+            # the ingest checkpoint's recorded row count (= turns, the
+            # row grain entering the layout shuffle) gates the
+            # write-balancing sub-split for free (no count job)
+            layout=dict(
                 n_buckets=n_buckets,
                 n_rows=store.metrics("ingest")["rows"],
                 min_bucket_rows=cfg.sub_split_min_bucket_rows,
-            )),
+            ),
         ).drop("_sub"),
         resume=resume,
         inputs=["candidates", "fuzzy_scores", "<dictionary>", "entity_map"],
@@ -996,15 +828,4 @@ def build_kg(
         "triples", "triples_raw", resume=resume,
         inputs=["triples_raw", "entity_map"],
     )
-    # flat per-mention view of the per-turn linking (fully lazy: the
-    # sub-plan re-derives from the candidates checkpoint on evaluation)
-    linked_flat = _linked_plan().select(
-        "conv_id", "turn_idx", F.explode("ents").alias("e")
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("e.ts").alias("start"),
-        F.col("e.te").alias("end"),
-        F.col("e.entity_id").alias("entity_id"),
-    )
-    return KgResult(triples, entity_map, linked_flat, store)
+    return KgResult(triples, entity_map, store)

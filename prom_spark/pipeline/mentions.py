@@ -1,46 +1,33 @@
-"""Stage 1: batched mention detection over transcript text.
+"""Stage 1: mention detection over transcript text.
 
-north_star: "batched mention detection and candidate entity generation
-via vectorized pandas/Arrow UDFs". The stage tokenizes each turn and
-emits candidate grams (unigrams + bigrams) with token positions — the
-re-expression of the reference's per-label spaCy analysis
-(reference src/compare_by_labels.py:58-123) for transcript turns.
+The stage tokenizes each turn and emits candidate grams (unigrams +
+bigrams) with token positions — the re-expression of the reference's
+per-label spaCy analysis (reference src/compare_by_labels.py:58-123)
+for transcript turns.
 
-Two interchangeable implementations (tested for identical output):
+There is one detector and it is JVM-native: regex tokenization plus
+array transforms, fully inside whole-stage codegen, so no row ever
+crosses the Python boundary. Its forms differ only in what they emit:
 
-  native  pure JVM column expressions (split / transform / sequence),
-          fully inside whole-stage codegen — the default. Tokenization
-          this simple never needs to leave the JVM; per the engine's
-          design rules the Python path is reserved for logic Spark
-          cannot express.
-  arrow   vectorized pandas UDF — the slot a real NER model plugs into
-          (per-executor lazy init, Arrow batches, no per-row Python).
+  detect_mentions           every candidate gram occurrence
+  detect_matching_mentions  only occurrences in a key set, probed inside
+                            the token arrays before the explode
+  detect_predicates         predicate-token occurrences
+  distinct_grams            the corpus's distinct candidate grams
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _TOKEN = re.compile(r"[a-z0-9#\-]+")
 
 STOP_GRAMS = ("the", "a", "an", "in", "this", "of")
 
 _GRAM_STRUCT = "struct<gram:string,start:int,end:int>"
-
-_GRAMS_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("gram", T.StringType()),
-            T.StructField("start", T.IntegerType()),
-            T.StructField("end", T.IntegerType()),
-        ]
-    )
-)
 
 
 def tokens(text_col) -> Column:
@@ -55,21 +42,38 @@ def tokens(text_col) -> Column:
     return F.regexp_extract_all(F.lower(text_col), F.lit(_TOKEN.pattern), 0)
 
 
-@F.pandas_udf(_GRAMS_TYPE)
-def _candidate_grams(texts: pd.Series) -> pd.Series:
-    out = []
-    for text in texts:
-        toks = _TOKEN.findall((text or "").lower())
-        grams = [(t, i, i) for i, t in enumerate(toks)]
-        grams += [
-            (f"{toks[i]} {toks[i+1]}", i, i + 1) for i in range(len(toks) - 1)
-        ]
-        out.append(grams)
-    return pd.Series(out)
+def _with_toks(transcripts: DataFrame) -> DataFrame:
+    """Add the ``_toks`` token array unless the caller already did."""
+    if "_toks" in transcripts.columns:
+        return transcripts
+    return transcripts.withColumn("_toks", tokens(F.col("text")))
 
 
-def _bigrams_native(bigram_first_tokens: list[str] | None = None) -> Column:
-    """Bigram struct array from a ``_toks`` column, JVM-only.
+def _bigram(i: Column) -> Column:
+    """The bigram starting at 0-based token position ``i`` of ``_toks``."""
+    return F.concat_ws(
+        " ",
+        F.element_at(F.col("_toks"), i + 1),
+        F.element_at(F.col("_toks"), i + 2),
+    )
+
+
+def _bigram_positions(bigram_first_tokens: list[str] | None) -> Column:
+    """Start positions of the candidate bigrams of ``_toks``: every
+    adjacent pair, or only those whose first token is in
+    ``bigram_first_tokens``."""
+    positions = F.sequence(F.lit(0), F.size("_toks") - 2)
+    if bigram_first_tokens is None:
+        return positions
+    first_set = F.array(*[F.lit(t) for t in sorted(set(bigram_first_tokens))])
+    return F.filter(
+        positions,
+        lambda i: F.array_contains(first_set, F.element_at(F.col("_toks"), i + 1)),
+    )
+
+
+def _bigram_structs(bigram_first_tokens: list[str] | None = None) -> Column:
+    """Bigram struct array from a ``_toks`` column.
 
     ``bigram_first_tokens`` prunes candidate bigrams at the source: a
     bigram is emitted only when its first token can start a multiword
@@ -80,25 +84,12 @@ def _bigrams_native(bigram_first_tokens: list[str] | None = None) -> Column:
     (For dictionaries whose first-token set is itself huge, swap the
     literal array for a Bloom filter — the expression shape is the same.)
     """
-    positions = F.sequence(F.lit(0), F.size("_toks") - 2)
-    if bigram_first_tokens is not None:
-        first_set = F.array(*[F.lit(t) for t in sorted(set(bigram_first_tokens))])
-        positions = F.filter(
-            positions,
-            lambda i: F.array_contains(
-                first_set, F.element_at(F.col("_toks"), i + 1)
-            ),
-        )
     return F.when(
         F.size("_toks") >= 2,
         F.transform(
-            positions,
+            _bigram_positions(bigram_first_tokens),
             lambda i: F.struct(
-                F.concat_ws(
-                    " ",
-                    F.element_at(F.col("_toks"), i + 1),
-                    F.element_at(F.col("_toks"), i + 2),
-                ).alias("gram"),
+                _bigram(i).alias("gram"),
                 i.cast("int").alias("start"),
                 (i + 1).cast("int").alias("end"),
             ),
@@ -108,7 +99,6 @@ def _bigrams_native(bigram_first_tokens: list[str] | None = None) -> Column:
 
 def detect_mentions(
     transcripts: DataFrame,
-    impl: str = "native",
     keep_cols: tuple[str, ...] = (),
     bigram_first_tokens: list[str] | None = None,
 ) -> DataFrame:
@@ -122,23 +112,7 @@ def detect_mentions(
     re-join the output to its own input to recover them (on a stream
     that would be a stateful stream-stream join).
     """
-    if impl == "arrow":
-        g = transcripts.select(
-            "conv_id",
-            "turn_idx",
-            *keep_cols,
-            F.explode(_candidate_grams(F.col("text"))).alias("m"),
-        ).select(
-            "conv_id",
-            "turn_idx",
-            *keep_cols,
-            F.col("m.gram").alias("gram"),
-            F.col("m.start").alias("start"),
-            F.col("m.end").alias("end"),
-        )
-        return g.filter(~F.col("gram").isin(*STOP_GRAMS))
-
-    # native: ONE pass over the token array — tokenization (the regex
+    # ONE pass over the token array — tokenization (the regex
     # split) is the dominant per-turn cost, so a two-branch
     # unigram/bigram union that re-tokenizes the text measures ~3x
     # slower end-to-end despite its prettier unigram plan. A transcript
@@ -156,14 +130,13 @@ def detect_mentions(
             i.cast("int").alias("end"),
         ),
     )
-    if "_toks" not in transcripts.columns:
-        transcripts = transcripts.withColumn("_toks", tokens(F.col("text")))
+    transcripts = _with_toks(transcripts)
     g = transcripts.select(
         "conv_id",
         "turn_idx",
         *keep_cols,
         F.explode(
-            F.concat(uni, _bigrams_native(bigram_first_tokens))
+            F.concat(uni, _bigram_structs(bigram_first_tokens))
         ).alias("m"),
     ).select(
         "conv_id",
@@ -186,7 +159,7 @@ def detect_matching_mentions(
 ) -> DataFrame:
     """Mention occurrences whose gram is in ``match_keys`` — the fused
     form of ``detect_mentions(...).join(match_keys, how="left_semi")``
-    for key sets small enough to inline (kg.build_kg gates on
+    for key sets small enough to inline (kg.candidate_plan gates on
     ``cfg.inline_keyset_limit``).
 
     The membership test runs INSIDE the per-turn arrays (an InSet hash
@@ -207,12 +180,12 @@ def detect_matching_mentions(
 
     ``predicates``: when given, predicate-token occurrences ride the
     SAME scan as extra rows and the output gains a ``kind`` column
-    ('m' mention / 'p' predicate). Predicate probing matches
-    ``extract_triples``'s direct ``isin(*PREDICATES)`` over the token
-    array — it does NOT apply the stop-gram filter, and a token that is
-    both an alias and a predicate emits both rows. Fusing the predicate
-    scan here is what lets the triple-extraction stage run with no
-    second pass over the corpus text (see kg.extract_triples).
+    ('m' mention / 'p' predicate). Predicate probing is a direct
+    ``isin(*predicates)`` over the token array — it does NOT apply the
+    stop-gram filter, and a token that is both an alias and a predicate
+    emits both rows. Fusing the predicate scan here is what lets the
+    triple-extraction stage run with no second pass over the corpus
+    text (see kg.extract_triples).
     """
     keys = sorted(set(match_keys) - set(STOP_GRAMS))
     uni_keys = [k for k in keys if " " not in k]
@@ -227,8 +200,7 @@ def detect_matching_mentions(
             fields.append(F.lit(kind).alias("kind"))
         return F.struct(*fields)
 
-    if "_toks" not in transcripts.columns:
-        transcripts = transcripts.withColumn("_toks", tokens(F.col("text")))
+    transcripts = _with_toks(transcripts)
     parts = []
     if uni_keys:
         parts.append(
@@ -241,19 +213,14 @@ def detect_matching_mentions(
             )
         )
     if bi_keys:
-        positions = F.sequence(F.lit(0), F.size("_toks") - 2)
         parts.append(
             F.when(
                 F.size("_toks") >= 2,
                 F.filter(
                     F.transform(
-                        positions,
+                        _bigram_positions(None),
                         lambda i: _struct(
-                            F.concat_ws(
-                                " ",
-                                F.element_at(F.col("_toks"), i + 1),
-                                F.element_at(F.col("_toks"), i + 2),
-                            ),
+                            _bigram(i),
                             i.cast("int"),
                             (i + 1).cast("int"),
                             "m",
@@ -293,8 +260,7 @@ def detect_predicates(transcripts: DataFrame, predicates: list[str]) -> DataFram
     union in (the inline plan gets predicates fused into its one scan via
     ``detect_matching_mentions(predicates=...)``). No stop-gram filter:
     semantics match ``isin(*PREDICATES)`` over the raw token array."""
-    if "_toks" not in transcripts.columns:
-        transcripts = transcripts.withColumn("_toks", tokens(F.col("text")))
+    transcripts = _with_toks(transcripts)
     return transcripts.select(
         "conv_id",
         "turn_idx",
@@ -331,29 +297,12 @@ def distinct_grams(
     repeats tokens within a turn), so the partial-aggregate hash table
     sees materially fewer rows. This is the fuzzy-scoring input
     (vocabulary-bounded, corpus-independent output)."""
-    if "_toks" not in transcripts.columns:
-        transcripts = transcripts.withColumn("_toks", tokens(F.col("text")))
-    uni = F.col("_toks")
-    if bigram_first_tokens is not None:
-        first_set = F.array(*[F.lit(t) for t in sorted(set(bigram_first_tokens))])
-        positions = F.filter(
-            F.sequence(F.lit(0), F.size("_toks") - 2),
-            lambda i: F.array_contains(first_set, F.element_at(F.col("_toks"), i + 1)),
-        )
-    else:
-        positions = F.sequence(F.lit(0), F.size("_toks") - 2)
+    transcripts = _with_toks(transcripts)
     big = F.when(
         F.size("_toks") >= 2,
-        F.transform(
-            positions,
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(F.col("_toks"), i + 1),
-                F.element_at(F.col("_toks"), i + 2),
-            ),
-        ),
+        F.transform(_bigram_positions(bigram_first_tokens), _bigram),
     ).otherwise(F.array().cast("array<string>"))
     g = transcripts.select(
-        F.explode(F.array_distinct(F.concat(uni, big))).alias("gram")
+        F.explode(F.array_distinct(F.concat(F.col("_toks"), big))).alias("gram")
     )
     return g.filter(~F.col("gram").isin(*STOP_GRAMS)).distinct()

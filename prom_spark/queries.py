@@ -629,20 +629,6 @@ FROM agg GROUP BY 1
 """
 
 
-def q16_doc_stats(spark, sf_dir):
-    """Token counting, BPE-ish counting, quality score, fingerprint.
-    Driver-gated through the merged q16_doc_profile entry."""
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        token_count("text").alias("n_tokens"),
-        bpe_ish_token_count("text").alias("n_bpe"),
-        quality_score("text").alias("quality"),
-        english_stopword_ratio("text").alias("stop_ratio"),
-        doc_fingerprint("text").alias("fingerprint"),
-    )
-
-
 _Q16_SQL = f"""
 SELECT doc_id,
        CASE WHEN length(regexp_replace(text, '^\\s+|\\s+$', '', 'g')) = 0 THEN 0
@@ -664,18 +650,6 @@ SELECT doc_id,
        md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fingerprint
 FROM documents
 """
-
-
-def q17_langid(spark, sf_dir):
-    """Stopword-ratio language heuristic.
-    Driver-gated through the merged q16_doc_profile entry."""
-    d = _t(spark, sf_dir, "documents")
-    ratio = english_stopword_ratio("text")
-    return d.select(
-        "doc_id",
-        "lang",
-        F.when(ratio >= 0.05, F.lit("en")).otherwise(F.lit("other")).alias("lang_pred"),
-    )
 
 
 _Q17_SQL = f"""
@@ -912,14 +886,31 @@ WITH t AS ({_DOC_TOKS_SQL})
 
 def q25_entity_linking(spark, sf_dir):
     """Pipeline stage 3 (entity-link scoring + span selection) under the
-    value-hash gate: exact broadcast path, fuzzy
-    Levenshtein+embedding-cosine ensemble, best-candidate-per-span."""
-    from prom_spark.pipeline.kg import link_mentions, term_dictionary
-    from prom_spark.pipeline.mentions import detect_mentions
+    value-hash gate: the KG pipeline's own candidate plan and scoring
+    joins (exact broadcast path, fuzzy Levenshtein+embedding-cosine
+    ensemble), then a flat best-candidate-per-span selection."""
+    from prom_spark.config import DEFAULT_CONFIG as cfg
+    from prom_spark.operators.selection import best_candidate_per_left_agg
+    from prom_spark.pipeline.kg import (
+        _fuzzy_scores,
+        _score_candidates,
+        candidate_plan,
+        term_dictionary,
+    )
+    from prom_spark.pipeline.mentions import distinct_grams
 
-    linked = link_mentions(
-        detect_mentions(_doc_transcripts(spark, sf_dir)),
-        term_dictionary(spark, LINK_TERMS),
+    tr = _doc_transcripts(spark, sf_dir)
+    d = term_dictionary(spark, LINK_TERMS).select("alias", "entity_id", "embedding")
+    fuzzy = _fuzzy_scores(distinct_grams(tr), d, cfg).localCheckpoint(eager=True)
+    cands = candidate_plan(tr, d, fuzzy, n_dict=0, cfg=cfg)
+    linked = best_candidate_per_left_agg(
+        _score_candidates(
+            cands.filter(F.col("kind") == "m").drop("kind"), d, fuzzy, cfg,
+            use_salting=False,
+        ),
+        key_cols=["conv_id", "turn_idx", "start", "end"],
+        payload_cols=["entity_id", "gram"],
+        threshold=cfg.link_threshold,
     )
     return linked.select(
         "conv_id",

@@ -1,11 +1,13 @@
 """Streaming KG construction (Structured Streaming).
 
-Transcripts arrive as files (Kafka on a real deployment — same API);
-the stateless stages (mention detection, dictionary linking) run
-directly on the stream; windowed/watermarked aggregation handles late
-turns; triple emission + canonical mapping run per micro-batch via
-``foreachBatch`` (the cross-turn window and CC need batch semantics —
-exactly the stages the reference could never stream at all).
+Transcripts arrive as files (Kafka on a real deployment — same API).
+The stateless stages (mention detection, exact dictionary linking) run
+directly on the stream for the windowed/watermarked entity counts and
+the stateful first-seen operator. Triple construction runs per
+micro-batch via ``foreachBatch`` with the batch pipeline's own linking
+plan (``kg.candidate_plan`` -> ``kg.triples_plan``): the cross-turn
+window needs batch semantics — exactly the stages the reference could
+never stream at all.
 """
 
 from __future__ import annotations
@@ -127,15 +129,25 @@ def run_streaming_kg(
     use_salting: bool = False,
     hot_keys=None,
 ) -> None:
-    """Micro-batch KG construction: each batch runs the batch linking +
-    triple extraction (foreachBatch), appending to the triple table.
-    availableNow trigger: drains all pending files then stops — the
-    deterministic test/batch-backfill mode.
+    """Micro-batch KG construction: each batch runs the batch pipeline's
+    linking plan (``kg.candidate_plan`` -> ``kg.triples_plan``) in
+    foreachBatch, appending to the triple table. availableNow trigger:
+    drains all pending files then stops — the deterministic
+    test/batch-backfill mode.
+
+    Per batch, the fuzzy scores of its distinct grams and its candidate
+    relation are ``localCheckpoint``-ed where ``build_kg`` checkpoints
+    its ``fuzzy_scores`` and ``candidates`` stages, so the source is
+    read twice (grams, candidates) and the triple plan runs over the
+    small candidate table. Unlike ``build_kg``, bigrams are not
+    first-token pruned (``bigram_first_tokens=None``): every bigram is
+    fuzzy-scored, so the stream can link a fuzzy bigram that batch never
+    generates.
 
     Canonicalization state is CROSS-batch: the dictionary-derived
     ``entity_map`` (computed once, broadcast into every micro-batch)
-    maps entity ids to canonical cluster ids inside ``extract_triples``,
-    so streamed triples are canonical exactly like batch triples.
+    is applied on the candidate stream, so streamed triples are
+    canonical exactly like batch triples.
 
     ``use_salting`` / ``hot_keys`` reuse the batch join design for
     beyond-broadcast dictionaries: micro-batches are usually small
@@ -145,27 +157,36 @@ def run_streaming_kg(
     a priori (per-batch hot-key detection would add a count pass to
     every trigger).
     """
-    from prom_spark.config import DEFAULT_CONFIG
+    from prom_spark.config import DEFAULT_CONFIG as cfg
     from prom_spark.pipeline.kg import (
+        _fuzzy_scores,
+        candidate_plan,
         canonicalize_entities,
-        extract_triples,
-        link_mentions,
+        dictionary_regime,
+        triples_plan,
     )
-    from prom_spark.pipeline.mentions import detect_mentions
+    from prom_spark.pipeline.mentions import distinct_grams
 
     if entity_map is None:
         entity_map = canonicalize_entities(dictionary)
     entity_map = entity_map.localCheckpoint(eager=True)
+    dict_slim = dictionary.select("alias", "entity_id", "embedding")
+    use_salting, n_dict = dictionary_regime(dict_slim, cfg, use_salting)
 
     stream = stream_transcripts(spark, input_path)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        mentions = detect_mentions(batch)
-        linked = link_mentions(
-            mentions, dictionary, DEFAULT_CONFIG,
+        fuzzy_scores = _fuzzy_scores(
+            distinct_grams(batch), dict_slim, cfg,
+            broadcast_dict=n_dict <= cfg.dict_broadcast_limit,
+        ).localCheckpoint(eager=True)
+        candidates = candidate_plan(
+            batch, dict_slim, fuzzy_scores, n_dict, cfg, hot_keys=hot_keys
+        ).localCheckpoint(eager=True)
+        triples = triples_plan(
+            candidates, dict_slim, fuzzy_scores, entity_map, cfg,
             use_salting=use_salting, hot_keys=hot_keys,
         )
-        triples = extract_triples(batch, linked, entity_map=entity_map)
         triples.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
             output_dir
         )

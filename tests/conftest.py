@@ -1,10 +1,15 @@
-"""Shared Spark session for the test suite."""
+"""Shared Spark session and testdata fixture for the test suite."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
 from prom_spark.session import get_spark
+
+# smallest scale factor of the shared testdata tables (TESTDATA.md)
+SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
@@ -17,3 +22,10 @@ def spark():
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture()
+def sf_dir():
+    if not os.path.isdir(SF_DIR):
+        pytest.skip(f"testdata missing: {SF_DIR}")
+    return SF_DIR

@@ -149,21 +149,6 @@ def test_canonicalization_merges_duplicates(spark, kg):
         assert r.canonical_id <= r.entity_id
 
 
-def test_mentions_native_equals_arrow(spark):
-    """The JVM-native mention detector and the Arrow-UDF variant are
-    interchangeable: identical (conv_id, turn_idx, gram, start, end)."""
-    from prom_spark.pipeline.mentions import detect_mentions
-
-    tr = synth_transcripts(spark, n_convs=25, turns_per_conv=4)
-    tr = tr.withColumn(
-        "text",
-        F.when(F.col("turn_idx") == 0, F.lit("")).otherwise(F.col("text")),
-    )
-    native = {tuple(r) for r in detect_mentions(tr, impl="native").collect()}
-    arrow = {tuple(r) for r in detect_mentions(tr, impl="arrow").collect()}
-    assert native == arrow and len(native) > 0
-
-
 def test_detect_matching_mentions_equals_semi_join(spark):
     """The in-array membership plan (detect_matching_mentions) must emit
     exactly the rows of detect_mentions + left-semi join on the same key
@@ -233,7 +218,9 @@ def test_inline_keyset_gate_matches_semi_join_pipeline(spark, tmp_path):
 def test_distinct_grams_equals_mention_stream_distinct(spark):
     """distinct_grams (strings-only, per-turn pre-dedup) must equal
     detect_mentions(...).select('gram').distinct() exactly — same
-    stop-gram filter, same first-token bigram blocking, empty turns."""
+    stop-gram filter, same first-token bigram blocking, empty turns. An
+    empty turn (text='') emits no mention row and does not break the
+    detector for the turns around it."""
     from prom_spark.pipeline.mentions import detect_mentions, distinct_grams
 
     tr = synth_transcripts(spark, n_convs=30, turns_per_conv=4, n_entities=32)
@@ -242,13 +229,12 @@ def test_distinct_grams_equals_mention_stream_distinct(spark):
         F.when(F.col("turn_idx") == 0, F.lit("")).otherwise(F.col("text")),
     )
     for ft in (None, ["the", "conveyor", "zz-nope"]):
-        a = {
-            r.gram
-            for r in detect_mentions(tr, bigram_first_tokens=ft)
-            .select("gram").distinct().collect()
-        }
+        m = detect_mentions(tr, bigram_first_tokens=ft)
+        a = {r.gram for r in m.select("gram").distinct().collect()}
         b = {r.gram for r in distinct_grams(tr, bigram_first_tokens=ft).collect()}
         assert a == b and len(a) > 0, (ft, len(a), len(b))
+        turns = {r.turn_idx for r in m.select("turn_idx").distinct().collect()}
+        assert turns == {1, 2, 3}, turns
 
 
 def test_detect_matching_mentions_predicates(spark):
@@ -308,68 +294,149 @@ def test_detect_matching_mentions_predicates(spark):
     assert alt == p
 
 
-def test_fused_triples_equal_unfused_extraction(spark, kg):
-    """build_kg's single-exchange triples stage (preds carried through
-    the candidate stream, window keyed on the layout columns) must emit
-    exactly the triples of the unfused formulation: per-turn linking
-    without preds + transcript re-scan + (conv_id, turn_idx) join."""
+def _scored_candidates(tr, d, cfg=None, use_salting=False):
+    """The shared linking plan up to the scored candidate stream:
+    (candidates, scored 'm' rows), built the way the streaming
+    micro-batches and q25 build it (no bigram pruning)."""
+    from prom_spark.config import DEFAULT_CONFIG
     from prom_spark.pipeline.kg import (
-        canonicalize_entities,
-        extract_triples,
-        link_mentions_per_turn,
+        _fuzzy_scores,
+        _score_candidates,
+        candidate_plan,
+        dictionary_regime,
     )
-    from prom_spark.pipeline.mentions import detect_mentions
+    from prom_spark.pipeline.mentions import distinct_grams
+
+    cfg = cfg or DEFAULT_CONFIG
+    dict_slim = d.select("alias", "entity_id", "embedding")
+    use_salting, n_dict = dictionary_regime(dict_slim, cfg, use_salting)
+    fuzzy = _fuzzy_scores(
+        distinct_grams(tr), dict_slim, cfg,
+        broadcast_dict=n_dict <= cfg.dict_broadcast_limit,
+    ).localCheckpoint(eager=True)
+    cands = candidate_plan(tr, dict_slim, fuzzy, n_dict, cfg).localCheckpoint(
+        eager=True
+    )
+    scored = _score_candidates(
+        cands.filter(F.col("kind") == "m").drop("kind"), dict_slim, fuzzy, cfg,
+        use_salting=use_salting,
+    )
+    return cands, scored
+
+
+def _flat_links(scored, emap=None):
+    """Per-span selection of the scored stream as q25 does it
+    (best_candidate_per_left_agg), optionally mapped to canonical ids."""
+    from prom_spark.config import DEFAULT_CONFIG
+    from prom_spark.operators.selection import best_candidate_per_left_agg
+
+    flat = best_candidate_per_left_agg(
+        scored,
+        key_cols=["conv_id", "turn_idx", "start", "end"],
+        payload_cols=["entity_id", "gram"],
+        threshold=DEFAULT_CONFIG.link_threshold,
+    )
+    if emap is None:
+        return flat
+    return (
+        flat.join(F.broadcast(emap), on="entity_id", how="left")
+        .withColumn("entity_id", F.coalesce("canonical_id", "entity_id"))
+        .drop("canonical_id")
+    )
+
+
+def _python_triples(turns):
+    """Plain-Python triple extraction, the reference for extract_triples.
+
+    ``turns``: {(conv_id, turn_idx): (tokens, [(start, end, entity_id)])}
+    with one linked entity per span. Emits the `<subj> <pred> [the]
+    <obj>` adjacency triples (subject span ends right before the
+    predicate token, object span starts one or two tokens after it),
+    ordered co_occurs pairs of the turn's distinct entities, and
+    `follows` from each turn's subject (its earliest span) to the
+    previous linked turn's subject in the same conversation."""
+    from prom_spark.datagen import PREDICATES
+
+    out = set()
+    prev = {}
+    for (conv, turn), (toks, ents) in sorted(turns.items()):
+        if not ents:
+            continue
+        for p, tok in enumerate(toks):
+            if tok not in PREDICATES:
+                continue
+            for _, s_end, s in ents:
+                if s_end != p - 1:
+                    continue
+                for o_start, _, o in ents:
+                    if o_start in (p + 1, p + 2):
+                        out.add((conv, turn, s, tok, o))
+        ids = sorted({e for _, _, e in ents})
+        for i, x in enumerate(ids):
+            for y in ids[i + 1:]:
+                out.add((conv, turn, x, "co_occurs", y))
+        subj = min(ents)[2]
+        if conv in prev:
+            out.add((conv, turn, subj, "follows", prev[conv]))
+        prev[conv] = subj
+    return out
+
+
+def test_fused_triples_equal_unfused_extraction(spark, kg):
+    """build_kg's single-exchange triples stage (scoring, in-array
+    per-span selection, extraction and the `follows` window in one plan)
+    must emit exactly the triples a plain-Python extractor derives from
+    the turn tokens and the flat per-span links (q25's selection) of the
+    same checkpointed candidates and fuzzy scores."""
+    from prom_spark.datagen import PREDICATES
+    from prom_spark.pipeline.kg import _score_candidates
+    from prom_spark.pipeline.mentions import _TOKEN
 
     tr, d, res, _ = kg
-    first_tokens = [
-        r.w
-        for r in d.filter(F.size(F.split("alias", " ")) > 1)
-        .select(F.split("alias", " ").getItem(0).alias("w"))
-        .distinct()
-        .collect()
-    ]
-    m = detect_mentions(tr, bigram_first_tokens=first_tokens)
-    emap = canonicalize_entities(d)
-    linked_old = link_mentions_per_turn(m, d, entity_map=emap)
-    want = {
-        tuple(r)
-        for r in extract_triples(tr, linked_old)
-        .select("conv_id", "turn_idx", "subj", "pred", "obj")
-        .collect()
+    scored = _score_candidates(
+        res.store.read("candidates").filter(F.col("kind") == "m").drop("kind"),
+        d.select("alias", "entity_id", "embedding"),
+        res.store.read("fuzzy_scores"),
+        use_salting=False,
+    )
+    turns = {
+        (r.conv_id, r.turn_idx): (_TOKEN.findall(r.text.lower()), [])
+        for r in tr.collect()
     }
+    for r in _flat_links(scored, res.entity_canonical).collect():
+        turns[(r.conv_id, r.turn_idx)][1].append((r.start, r.end, r.entity_id))
+    want = _python_triples(turns)
     got = {
         tuple(r)
         for r in res.triples.select(
             "conv_id", "turn_idx", "subj", "pred", "obj"
         ).collect()
     }
-    assert got == want and len(got) > 0
+    assert got == want and len(want) > 0
+    assert {p for *_, p, _ in want} == set(PREDICATES) | {"co_occurs", "follows"}
 
 
 def test_per_turn_linking_equals_flat_linking(spark):
-    """link_mentions_per_turn (fused, in-array span selection) must make
-    exactly the flat path's choices after canonical mapping."""
-    from prom_spark.datagen import entity_dictionary, synth_transcripts
-    from prom_spark.pipeline.kg import (
-        canonicalize_entities,
-        link_mentions,
-        link_mentions_per_turn,
-    )
-    from prom_spark.pipeline.mentions import detect_mentions
+    """Over ONE scored candidate stream, the two selections in the code
+    make the same per-span choices after canonical mapping:
+    best_candidate_per_left_agg (q25's flat rows) and _per_turn_select
+    (the in-array keep-first the triples plan uses)."""
+    from prom_spark.pipeline.kg import _per_turn_select, canonicalize_entities
 
     tr = synth_transcripts(spark, n_convs=40, turns_per_conv=5, n_entities=48)
     d = entity_dictionary(spark, 48).cache()
     emap = canonicalize_entities(d).cache()
-    m = detect_mentions(tr)
+    cands, scored = _scored_candidates(tr, d)
 
-    flat = link_mentions(m, d).join(F.broadcast(emap), on="entity_id", how="left")
     flat = {
-        (r.conv_id, r.turn_idx, r.start, r.end, r.canonical_id or r.entity_id)
-        for r in flat.collect()
+        (r.conv_id, r.turn_idx, r.start, r.end, r.entity_id)
+        for r in _flat_links(scored, emap).collect()
     }
     fused = {
         (r.conv_id, r.turn_idx, r.e.ts, r.e.te, r.e.entity_id)
-        for r in link_mentions_per_turn(m, d, entity_map=emap)
+        for r in _per_turn_select(
+            scored, cands.filter(F.col("kind") == "p"), emap
+        )
         .select("conv_id", "turn_idx", F.explode("ents").alias("e"))
         .collect()
     }
@@ -377,24 +444,23 @@ def test_per_turn_linking_equals_flat_linking(spark):
 
 
 def test_salted_paths_equal_broadcast_paths(spark):
-    """The beyond-broadcast join designs (salted exact join, salted
-    alias semi-reduction, replicated-fragment fuzzy join) must produce
-    exactly the broadcast paths' links when forced on small data."""
+    """The beyond-broadcast join designs of the shared linking plan
+    (salted exact join, salted alias semi-reduction, replicated-fragment
+    fuzzy join) must produce exactly the broadcast paths' links when
+    forced on small data."""
     import dataclasses
 
     from prom_spark.config import DEFAULT_CONFIG
-    from prom_spark.datagen import entity_dictionary, synth_transcripts
-    from prom_spark.pipeline.kg import _fuzzy_scores, link_mentions
+    from prom_spark.pipeline.kg import _fuzzy_scores
     from prom_spark.pipeline.mentions import detect_mentions
 
     tr = synth_transcripts(spark, n_convs=30, turns_per_conv=4, n_entities=32)
     d = entity_dictionary(spark, 32).cache()
-    m = detect_mentions(tr)
 
     def links(**kw):
         return {
             tuple(r)
-            for r in link_mentions(m, d, **kw)
+            for r in _flat_links(_scored_candidates(tr, d, **kw)[1])
             .select("conv_id", "turn_idx", "start", "end", "entity_id")
             .collect()
         }
@@ -412,6 +478,7 @@ def test_salted_paths_equal_broadcast_paths(spark):
     # embedding-carrying dictionary (the exact inconsistency the salted
     # path exists to avoid). Near-miss grams (one char off an alias) +
     # a low threshold make the fuzzy output deterministically non-empty.
+    m = detect_mentions(tr)
     dict_slim = d.select("alias", "entity_id", "embedding")
     near_miss = d.select(
         F.concat(F.substring("alias", 1, F.length("alias") - 1), F.lit("x")).alias("gram")
@@ -537,19 +604,6 @@ def test_fuzzy_rejoin_salted_path(spark):
     assert forced == base and len(base) > 0
 
 
-def test_extract_triples_requires_preds_or_transcripts(spark):
-    """A linked frame without per-turn preds and no transcripts must fail
-    loudly (old-format checkpoint resume), not AttributeError mid-plan."""
-    from prom_spark.pipeline.kg import extract_triples
-
-    linked = spark.createDataFrame(
-        [], "conv_id string, turn_idx int, "
-        "ents array<struct<ts:int,te:int,entity_id:string>>",
-    )
-    with pytest.raises(ValueError, match="preds"):
-        extract_triples(None, linked)
-
-
 def test_checkpoint_staleness_invalidation(spark, tmp_path):
     """get_or_compute must recompute (not reuse) a checkpoint whose
     recorded inputs differ or whose schema misses required columns, and
@@ -585,3 +639,33 @@ def test_checkpoint_staleness_invalidation(spark, tmp_path):
         "s", make(), resume=True, inputs=["u1", "gate:x"], require_cols=["kind"]
     )
     assert calls["n"] == 3
+
+
+def test_q25_linking_matches_duckdb_oracle(spark, sf_dir):
+    """q25 — the shared candidate plan and scoring joins under a flat
+    per-span selection — must return exactly the rows of its DuckDB
+    twin over the sf0.001 testdata tables (the independent reference for
+    the linking plan's scores and choices)."""
+    import sys
+
+    import duckdb
+
+    import prom_spark.queries as Q
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    from parity_check import TABLES, canon
+
+    def rows(cols, rs):
+        order = sorted(range(len(cols)), key=cols.__getitem__)
+        return sorted(tuple(canon(r[i]) for i in order) for r in rs)
+
+    sdf = Q.q25_entity_linking(spark, sf_dir)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    res = con.execute(Q.oracle_sql()["q25_entity_linking"])
+    d_cols = [c[0] for c in res.description]
+    assert sorted(sdf.columns) == sorted(d_cols)
+    got = rows(sdf.columns, sdf.collect())
+    want = rows(d_cols, res.fetchall())
+    assert got == want and len(got) > 0

@@ -68,64 +68,57 @@ def test_q36_q37_fixture_discriminates(spark):
 
 
 def test_streaming_matches_batch(spark, tmp_path):
-    """availableNow streaming run must produce the same CANONICAL
-    within-turn triples as the batch pipeline on the same input (the
-    stream threads the dictionary-derived entity_map into every
-    micro-batch)."""
+    """An availableNow streaming run must produce exactly the CANONICAL
+    triples of build_kg on the same input: the micro-batches run the
+    batch pipeline's linking plan and thread the dictionary-derived
+    entity_map into every batch. The dictionary gains a near-miss
+    unigram alias ('chacking' for the corpus token 'checking') so the
+    stream's fuzzy scoring path links real mentions; a unigram alias
+    adds no fuzzy bigram, so batch's first-token bigram pruning cannot
+    make the two sides differ."""
     from prom_spark.datagen import entity_dictionary, synth_transcripts
-    from prom_spark.pipeline.kg import (
-        canonicalize_entities,
-        extract_triples,
-        link_mentions,
-    )
-    from prom_spark.pipeline.mentions import detect_mentions
+    from prom_spark.functions.embedding import hash_embedding
+    from prom_spark.pipeline.kg import build_kg
     from prom_spark.streaming.pipeline import run_streaming_kg
 
+    cols = ["conv_id", "turn_idx", "subj", "pred", "obj"]
     tr = synth_transcripts(spark, n_convs=20, turns_per_conv=5, n_entities=32)
-    d = entity_dictionary(spark, 32).cache()
+    base = entity_dictionary(spark, 32)
+    near_miss = spark.createDataFrame(
+        [("E0900", "chacking", "chacking")], "entity_id string, canonical string, alias string"
+    ).withColumn("embedding", hash_embedding(F.col("alias")))
+    d = base.unionByName(near_miss).cache()
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     tr.write.parquet(in_dir)
 
     run_streaming_kg(spark, in_dir, d, out_dir, ckpt)
-    got = {
-        (r.conv_id, r.turn_idx, r.subj, r.pred, r.obj)
-        for r in spark.read.parquet(out_dir).drop("batch_id").collect()
-    }
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(out_dir).select(*cols).collect()
+    )
 
-    batch_tr = spark.read.parquet(in_dir)
-    entity_map = canonicalize_entities(d).cache()
-    mentions = detect_mentions(batch_tr)
-    linked = link_mentions(mentions, d, use_salting=False)
-    want = {
-        tuple(r)
-        for r in extract_triples(batch_tr, linked, entity_map=entity_map)
-        .select("conv_id", "turn_idx", "subj", "pred", "obj")
-        .collect()
-    }
+    res = build_kg(
+        spark, spark.read.parquet(in_dir), d, str(tmp_path / "kg"), resume=False
+    )
+    want = sorted(tuple(r) for r in res.triples.select(*cols).collect())
     assert got == want and len(got) > 0
-    # the canonicalization must be non-vacuous: the dictionary contains
-    # duplicate entities (every 8th), so raw ids differ from canonical
-    raw = {
-        tuple(r)
-        for r in extract_triples(batch_tr, linked)
-        .select("conv_id", "turn_idx", "subj", "pred", "obj")
-        .collect()
-    }
-    assert raw != want
-    # streamed output ids are canonical ids only
-    canon = {r.canonical_id for r in entity_map.collect()}
+    # the fuzzy path is exercised: the near-miss entity is linked
+    assert any("E0900" in (s, o) for _, _, s, _, o in got)
+    # the canonicalization is non-vacuous: the dictionary holds
+    # duplicate entities (every 8th), and only canonical ids come out
+    emap = res.entity_canonical.collect()
+    canon = {r.canonical_id for r in emap}
+    assert any(r.entity_id != r.canonical_id for r in emap)
     ids_in_got = {s for (_, _, s, _, _) in got} | {o for (_, _, _, _, o) in got}
     assert ids_in_got <= canon
 
     # the salted big-dictionary join design must stream identically
     out2, ckpt2 = str(tmp_path / "out2"), str(tmp_path / "ckpt2")
     run_streaming_kg(spark, in_dir, d, out2, ckpt2, use_salting=True)
-    salted = {
-        (r.conv_id, r.turn_idx, r.subj, r.pred, r.obj)
-        for r in spark.read.parquet(out2).drop("batch_id").collect()
-    }
+    salted = sorted(
+        tuple(r) for r in spark.read.parquet(out2).select(*cols).collect()
+    )
     assert salted == want
 
 

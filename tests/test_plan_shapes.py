@@ -1,13 +1,15 @@
-"""Static physical-plan shape gates.
+"""Static physical-plan shape gates — the engine's one plan-gate system.
 
-tools/explain_audit.py asserts the engine's load-bearing plan
-properties when run by hand; these tests pin the most important one in
-the suite so a refactor cannot silently re-introduce the costs the
-round-3 plan work removed: the fused triple-extraction stage must plan
+Planning only (AQE off around the explain; nothing executes but the
+eager sub-steps a query function runs itself). They pin the load-bearing
+plan properties so a refactor cannot silently re-introduce the costs the
+plan work removed, e.g. the fused triple-extraction stage must plan
 exactly ONE exchange (the bucketed-layout repartition doubles as the
 cross-turn `follows` window's distribution) and NO join back to the
-transcripts. At 10^12 turns a second exchange of the largest
-intermediate is the single biggest avoidable cost in the pipeline.
+transcripts: at 10^12 turns a second exchange of the largest
+intermediate is the single biggest avoidable cost in the pipeline. The
+scan, aggregation and broadcast gates plan over the sf0.001 testdata
+tables (the ``sf_dir`` fixture).
 """
 
 import io
@@ -16,7 +18,7 @@ from contextlib import redirect_stdout
 import pytest
 
 
-def _formatted_plan(spark, df) -> str:
+def _formatted_plan(spark, df, mode: str = "formatted") -> str:
     # AQE wraps pre-execution plans in AdaptiveSparkPlan and hides node
     # detail until runtime; disable it around the explain only
     old = spark.conf.get("spark.sql.adaptive.enabled")
@@ -24,7 +26,7 @@ def _formatted_plan(spark, df) -> str:
     try:
         buf = io.StringIO()
         with redirect_stdout(buf):
-            df.explain("formatted")
+            df.explain(mode)
         return buf.getvalue()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)
@@ -54,7 +56,6 @@ def test_fused_triples_plan_single_exchange(spark, linked_shape):
 
     for n_rows, min_rows in ((None, None), (10_000_000, 1)):
         fused = extract_triples(
-            None,
             _bucket_layout(
                 linked_shape, 32, keep_sub=True,
                 n_rows=n_rows, min_bucket_rows=min_rows,
@@ -66,22 +67,80 @@ def test_fused_triples_plan_single_exchange(spark, linked_shape):
         assert "Window" in tree, tree
 
 
-def test_link_selection_plan_is_partial_agg(spark):
-    """Entity-link selection must plan as a partial aggregation (single
-    shuffle with map-side combine), never a window sort; the dictionary
-    join must broadcast in the broadcast regime."""
-    from prom_spark.pipeline.kg import link_mentions, term_dictionary
-    from prom_spark.pipeline.mentions import detect_mentions
+def test_link_selection_plan_is_partial_agg(spark, sf_dir):
+    """q25's flat entity-link selection over the shared candidate plan
+    must plan as a partial aggregation (single shuffle with map-side
+    combine), never a window sort; the dictionary joins must broadcast
+    in the broadcast regime."""
+    from prom_spark.queries import q25_entity_linking
 
-    tr = spark.createDataFrame(
-        [], "conv_id string, turn_idx int, text string"
-    )
-    linked = link_mentions(
-        detect_mentions(tr), term_dictionary(spark, ["alpha", "beta"])
-    )
-    tree = _op_tree(_formatted_plan(spark, linked))
+    tree = _op_tree(_formatted_plan(spark, q25_entity_linking(spark, sf_dir)))
     assert "Window" not in tree, tree
     assert "BroadcastHashJoin" in tree, tree
+    # partial + final aggregate (a Sort- or HashAggregate pair)
+    assert tree.count("Aggregate") >= 2, tree
+
+
+def test_scan_filter_pushdown_and_column_pruning(spark, sf_dir):
+    """A filter on a raw scan reaches the parquet reader and only the
+    projected columns are read."""
+    from pyspark.sql import functions as F
+
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    plan = _formatted_plan(
+        spark,
+        li.filter(F.col("l_quantity") > 30).select("l_orderkey", "l_quantity"),
+    )
+    assert "PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,30" in plan
+    read_schema = plan.split("ReadSchema")[1].splitlines()[0]
+    assert "l_orderkey" in read_schema and "l_comment" not in read_schema
+
+
+def test_q02_dimension_joins_broadcast(spark, sf_dir):
+    """q02's dimension side broadcasts, aggregates partially map-side,
+    and runs inside whole-stage codegen spans."""
+    from prom_spark.queries import q02_region_revenue
+
+    df = q02_region_revenue(spark, sf_dir)
+    tree = _op_tree(_formatted_plan(spark, df))
+    assert "BroadcastHashJoin" in tree, tree
+    assert "HashAggregate" in tree, tree
+    # simple mode marks whole-stage codegen spans as *(n)
+    simple = _formatted_plan(spark, df, "simple")
+    assert "*(" in simple, simple
+
+
+def test_q01_two_phase_aggregate_one_exchange(spark, sf_dir):
+    """q01's grouped aggregate is partial + final HashAggregate around
+    exactly one exchange."""
+    from prom_spark.queries import q01_lineitem_agg
+
+    tree = _op_tree(_formatted_plan(spark, q01_lineitem_agg(spark, sf_dir)))
+    assert tree.count("HashAggregate") >= 2, tree
+    assert tree.count("Exchange") == 1, tree
+
+
+def test_q31_profile_broadcast(spark, sf_dir):
+    """q31's language-profile table broadcasts onto the doc-trigram
+    stream (the corpus side never shuffles by trigram) and nothing plans
+    a cartesian product."""
+    from prom_spark.queries import q31_trigram_langid
+
+    plan = _formatted_plan(spark, q31_trigram_langid(spark, sf_dir))
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_q32_probes_broadcast_and_per_probe_window(spark, sf_dir):
+    """q32's probe signatures and probe embeddings both broadcast, the
+    corpus side streams, and the per-probe top-k is a window."""
+    from prom_spark.queries import q32_lsh_ann_topk
+
+    plan = _formatted_plan(spark, q32_lsh_ann_topk(spark, sf_dir))
+    tree = _op_tree(plan)
+    assert tree.count("BroadcastHashJoin") >= 2, tree
+    assert "CartesianProduct" not in plan
+    assert "Window" in tree, tree
 
 
 def test_build_kg_triple_stage_single_shuffle(spark):
@@ -91,13 +150,7 @@ def test_build_kg_triple_stage_single_shuffle(spark):
     repartition that `build_kg` threads through the grouping keys, the
     window partition keys and the bucketed write (round-4 fusion: the
     per-turn linked intermediate is never materialized)."""
-    from pyspark.sql import functions as F
-
-    from prom_spark.pipeline.kg import (
-        _per_turn_select,
-        _score_candidates,
-        extract_triples,
-    )
+    from prom_spark.pipeline.kg import triples_plan
 
     candidates = spark.createDataFrame(
         [], "conv_id string, turn_idx int, gram string, start int, "
@@ -111,18 +164,11 @@ def test_build_kg_triple_stage_single_shuffle(spark):
     )
     emap = spark.createDataFrame([], "entity_id string, canonical_id string")
 
-    scored = _score_candidates(
-        candidates.filter(F.col("kind") == "m").drop("kind"),
-        dict_slim, fuzzy, use_salting=False, fuzzy_rows=0,
-    )
     for n_rows, min_rows in ((None, None), (10_000_000, 1)):
-        lp = _per_turn_select(
-            scored,
-            entity_map=emap,
-            preds=candidates.filter(F.col("kind") == "p"),
+        fused = triples_plan(
+            candidates, dict_slim, fuzzy, emap, fuzzy_rows=0,
             layout=dict(n_buckets=32, n_rows=n_rows, min_bucket_rows=min_rows),
-        )
-        fused = extract_triples(None, lp).drop("_sub")
+        ).drop("_sub")
         tree = _op_tree(_formatted_plan(spark, fused))
         n_shuffles = tree.count("Exchange") - tree.count("BroadcastExchange")
         assert n_shuffles == 1, tree

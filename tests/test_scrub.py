@@ -115,6 +115,20 @@ def test_strip_boilerplate_preserves_order_and_content(spark):
     assert got[2] == "real content C\nmore C"
 
 
+def test_strip_boilerplate_keeps_all_boilerplate_document(spark):
+    """A document made only of boilerplate lines is kept, as an empty
+    text — the operator never drops a document."""
+    df = spark.createDataFrame(
+        [("g", 1, "hdr\nbody one"), ("g", 2, "hdr\nbody two"), ("g", 3, "hdr")],
+        "source string, doc_id long, text string",
+    )
+    got = {
+        r.doc_id: r.clean
+        for r in strip_boilerplate(df, "source", "doc_id", "text").collect()
+    }
+    assert got == {1: "body one", 2: "body two", 3: ""}
+
+
 def test_strip_boilerplate_broadcasts_detected_set(spark):
     df = spark.createDataFrame(
         [("web", 0, "a\nb"), ("web", 1, "a\nc")],

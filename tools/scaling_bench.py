@@ -786,7 +786,7 @@ A cluster of N→4N EXECUTORS — the regime the north_rule targets — adds a
 cache/memory subsystem with every node, so this single-box ceiling does
 not transfer; what does transfer is plan structure: no collect on the
 data path, single-shuffle stages, broadcast/salted skew handling,
-per-partition writes — evidenced in docs/PLANS.md and docs/COVERAGE.md.
+per-partition writes — pinned by tests/test_plan_shapes.py and mapped in docs/COVERAGE.md.
 Engine efficiency at the host's random-access ceiling is the strongest
 scaling statement this sandbox can physically express.
 
